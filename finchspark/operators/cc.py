@@ -306,9 +306,9 @@ def connected_components_incremental_delta(
     # materialized blocks instead of re-executing the caller's upstream plan
     # (LSH + verify) once per consumer; the blocks are delta-bounded and the
     # ContextCleaner frees them when the checkpointed RDD goes out of scope.
-    # Callers that know their epoch shape (e.g. the streaming path, whose
-    # `kept` frame is already persisted) pass broadcast_remap explicitly and
-    # skip the materialization.
+    # Callers that know their epoch shape (e.g. the streaming path, which
+    # takes the edge count observed on its pairs write) pass broadcast_remap
+    # explicitly and skip the materialization.
     if broadcast_remap is None:
         new_edges = new_edges.select("src", "dst").localCheckpoint(eager=True)
         _n_edges = new_edges.count()

@@ -103,6 +103,8 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Character-n-gram Jaccard + containment for pairs within `key_band` of
     each other (bounded exact comparison; LSH is the scale path).
+    `key` must be an integer column: the banded equi-join keys on `k + 1 ..
+    k + key_band`, so string or fractional keys never pair.
 
     Output: (key_a, key_b, jaccard, containment) — containment of A's grams
     in B, i.e. |A ∩ B| / |A|.

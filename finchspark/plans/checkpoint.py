@@ -8,7 +8,8 @@ an Iceberg catalog — `df.writeTo(...).append()` — without touching pipeline
 code; this sandbox has no Iceberg runtime jars).
 
 Every stage directory carries a `_finch_meta.json` with (run_id, stage,
-params_hash, row_count). Resume REQUIRES the params_hash to match — a
+params_hash, row_count, schema) plus the per-write lineage metrics observed
+on the write job itself. Resume REQUIRES the params_hash to match — a
 mismatch hard-fails, mirroring the reference's sketch-compatibility check
 (`SketchParams::check_compatibility`, `sketch_schemes/mod.rs:179-212`),
 instead of silently mixing sketches from different configs.
@@ -20,8 +21,9 @@ import time
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ParamsMismatch(RuntimeError):
@@ -72,6 +74,7 @@ class TableStore:
 
     def write(self, stage: str, df: DataFrame, mode: str = "overwrite") -> DataFrame:
         path = self._dir(stage)
+        meta_file = path / "_finch_meta.json"
         # per-partition lineage: tag rows with the writing partition id AND a
         # per-write id so partition ids from separate append writes never
         # collide in the metrics (they'd otherwise conflate independent
@@ -85,38 +88,45 @@ class TableStore:
         tagged = df.withColumn("_partition_id", F.spark_partition_id()).withColumn(
             "_write_id", F.lit(write_id)
         )
-        self._save(tagged, stage, mode)
-        out = self.read(stage)
-        # per-partition metrics from the lineage tag: one distributed agg
-        # over THIS write's rows only (filtered by _write_id — pushed to the
-        # scan); the skew ratio (max/mean) is the signal a re-partitioning
-        # decision needs before the next stage reads this one
-        per_part = {
-            int(r["_partition_id"]): r["n"]
-            for r in self._read_raw(stage)
-            .filter(F.col("_write_id") == write_id)
-            .groupBy("_partition_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_this_write = sum(per_part.values())
+        # per-partition metrics observed on the write job itself — no
+        # read-back: the row count plus a histogram of the lineage tag, whose
+        # bins are exactly (partition id, rows) while the write has at most
+        # nBins non-empty partitions (past that, adjacent ids merge and the
+        # summary stats describe the merged ranges). The skew ratio
+        # (max/mean) is the signal a re-partitioning decision needs before
+        # the next stage reads this one
+        obs = Observation()
+        self._save(
+            tagged.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.histogram_numeric(
+                    "_partition_id", F.lit(self._MAX_PARTITION_MAP + 1)
+                ).alias("parts"),
+            ),
+            stage,
+            mode,
+        )
+        seen = obs.get
+        per_part: dict[int, int] = {}
+        for b in seen["parts"] or ():
+            per_part[int(b["x"])] = per_part.get(int(b["x"]), 0) + int(b["y"])
+        n_this_write = seen["n"]
         # row_count stays the cumulative table count (append-aware). Fold
         # the previous meta's count instead of re-counting the table: every
         # write passes through this method, so prev row_count + this write
         # is exact — and a per-append full-table scan is O(store) per epoch
-        # on a streaming store (the count was the single largest fixed cost
-        # of a streaming epoch as the store grows). Fall back to a real
-        # count only for a table this store has no meta for.
+        # on a streaming store. `count_source` says which: "folded" counts
+        # drift if an append crashed before its meta write, and the next
+        # overwrite reconciles them. Fall back to a real count only for a
+        # table this store has no meta for.
         if mode != "append":
-            n = n_this_write
+            n, source = n_this_write, "counted"
+        elif meta_file.exists():
+            n = self.read_meta(stage).get("row_count", 0) + n_this_write
+            source = "folded"
         else:
-            meta_file = path / "_finch_meta.json"
-            if meta_file.exists():
-                n = json.loads(meta_file.read_text()).get(
-                    "row_count", 0
-                ) + n_this_write
-            else:
-                n = self._read_raw(stage).count()
+            n, source = self._read_raw(stage).count(), "counted"
         n_parts = max(len(per_part), 1)
         mean = n_this_write / n_parts
         meta = {
@@ -124,6 +134,7 @@ class TableStore:
             "stage": stage,
             "params_hash": self.params_hash,
             "row_count": n,
+            "count_source": source,
             "write_id": write_id,
             "write_row_count": n_this_write,
             "n_partitions": len(per_part),
@@ -134,12 +145,14 @@ class TableStore:
             if n_this_write
             else 0.0,
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
+            # reads pass it to the reader: no footer-reading inference job
+            "schema": json.loads(tagged.schema.json()),
         }
         if len(per_part) <= self._MAX_PARTITION_MAP:
             meta["partition_rows"] = {str(k): v for k, v in sorted(per_part.items())}
         path.mkdir(parents=True, exist_ok=True)
-        (path / "_finch_meta.json").write_text(json.dumps(meta, indent=1))
-        return out
+        meta_file.write_text(json.dumps(meta, indent=1))
+        return self.read(stage)
 
     # storage backend hooks — subclasses swap ONLY these two (the lineage
     # tagging, metrics, params-hash gate and resume logic above are shared)
@@ -147,8 +160,12 @@ class TableStore:
         tagged.write.mode(mode).format(self.fmt).save(str(self._dir(stage)))
 
     def _read_raw(self, stage: str) -> DataFrame:
-        spark = SparkSession.getActiveSession()
-        return spark.read.format(self.fmt).load(str(self._dir(stage)))
+        reader = SparkSession.active().read.format(self.fmt)
+        if (self._dir(stage) / "_finch_meta.json").exists():
+            schema = self.read_meta(stage).get("schema")
+            if schema is not None:
+                reader = reader.schema(StructType.fromJson(schema))
+        return reader.load(str(self._dir(stage)))
 
     def read(self, stage: str) -> DataFrame:
         return self._read_raw(stage).drop("_partition_id", "_write_id")

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -93,9 +93,6 @@ def latest_components(spark, components_path: str):
     return cur, vs[-1][0]
 
 
-_latest_components = latest_components  # backward-compat alias
-
-
 def store_latest_components(spark, table_store, stage: str):
     """(DataFrame | None, n_delta_epochs): the component map maintained in a
     TableStore as BASE table `stage` + append-only changelog `stage`_delta
@@ -110,23 +107,35 @@ def store_latest_components(spark, table_store, stage: str):
     every leftover delta row has epoch_id <= folded_epoch and is ignored, so
     a half-finished compaction degrades to "changelog not yet truncated"
     instead of stale deltas overriding fresh base labels."""
+    folded, _, n_delta = _fold_components(table_store, stage)
+    return folded, n_delta
+
+
+def _fold_components(table_store, stage: str, watermark=None, n_delta=None):
+    """(folded | None, watermark, n_delta) behind `store_latest_components`.
+    `watermark` and `n_delta` are read from the tables (one collect each)
+    unless the caller carries them over from the epochs it wrote itself;
+    the folded frame is a lazy plan either way."""
     from pyspark.sql.window import Window
 
-    delta_stage = f"{stage}_delta"
     if not table_store.exists(stage):
-        return None, 0
+        return None, -1, 0
     base = table_store.read(stage)
-    watermark = -1
     if "folded_epoch" in base.columns:
-        row = base.select(F.max("folded_epoch").alias("w")).first()
-        watermark = row["w"] if row["w"] is not None else -1
+        if watermark is None:
+            row = base.select(F.max("folded_epoch").alias("w")).first()
+            watermark = row["w"] if row["w"] is not None else -1
         base = base.drop("folded_epoch")
+    elif watermark is None:
+        watermark = -1
+    delta_stage = f"{stage}_delta"
     if not table_store.exists(delta_stage):
-        return base, 0
+        return base, watermark, 0
     d = table_store.read(delta_stage).filter(F.col("epoch_id") > watermark)
-    epochs = [r["epoch_id"] for r in d.select("epoch_id").distinct().collect()]
-    if not epochs:
-        return base, 0
+    if n_delta is None:
+        n_delta = len(d.select("epoch_id").distinct().collect())
+    if not n_delta:
+        return base, watermark, 0
     w = Window.partitionBy("node").orderBy(F.col("epoch_id").desc())
     latest = (
         d.withColumn("__rn", F.row_number().over(w))
@@ -136,7 +145,7 @@ def store_latest_components(spark, table_store, stage: str):
     folded = base.join(latest.select("node"), "node", "left_anti").unionByName(
         latest
     )
-    return folded, len(epochs)
+    return folded, watermark, n_delta
 
 
 def neardup_stream(
@@ -179,8 +188,15 @@ def neardup_stream(
     `table_store=None` degenerate case.
     """
     key_col = key_cols[0]
+    # the table-store component map's fold state, carried across this
+    # query's epochs so no epoch spends jobs re-reading it: the base's
+    # folded_epoch watermark and the changelog epochs written past it.
+    # None until the query's first epoch reads both from the tables (a
+    # restarted query starts from the tables again)
+    watermark = n_delta = None
 
     def _emit(batch_df: DataFrame, epoch_id: int) -> None:
+        nonlocal watermark, n_delta
         spark = batch_df.sparkSession
         new_sigs = build_signatures(
             batch_df,
@@ -217,10 +233,16 @@ def neardup_stream(
             tagged_pairs = kept.withColumn(
                 "epoch_id", F.lit(int(epoch_id)).cast("long")
             )
+            # the epoch's edge count (it sizes the CC remap broadcast) is
+            # observed on the pairs write, not counted by a job of its own
             if table_store is not None:
                 table_store.write(pairs_path, tagged_pairs, mode="append")
+                n_edges = table_store.read_meta(pairs_path)["write_row_count"]
             else:
-                tagged_pairs.write.mode("append").parquet(pairs_path)
+                obs = Observation()
+                observed = tagged_pairs.observe(obs, F.count(F.lit(1)).alias("n"))
+                observed.write.mode("append").parquet(pairs_path)
+                n_edges = obs.get["n"]
             if components_path is not None and table_store is not None:
                 from ..operators.cc import (
                     connected_components,
@@ -230,15 +252,9 @@ def neardup_stream(
                 edges = kept.select(
                     F.col("key_a").alias("src"), F.col("key_b").alias("dst")
                 )
-                # kept is persisted and already materialized by the pairs
-                # write, so this count is a cheap cache scan — deciding the
-                # remap broadcast here lets the incremental CC skip its own
-                # eager localCheckpoint + count materialization per epoch
-                # (cc.connected_components_incremental_delta docstring)
-                n_edges = kept.count()
                 delta_stage = f"{components_path}_delta"
-                prev, n_delta = store_latest_components(
-                    spark, table_store, components_path
+                prev, watermark, n_delta = _fold_components(
+                    table_store, components_path, watermark, n_delta
                 )
                 epoch_l = F.lit(int(epoch_id)).cast("long")
                 if prev is None:
@@ -257,6 +273,7 @@ def neardup_stream(
                             "epoch_id", F.lit(0).cast("long")
                         ),
                     )
+                    watermark, n_delta = int(epoch_id), 0
                 else:
                     from ..operators.cc import _BROADCAST_REMAP_MAX_EDGES
 
@@ -286,6 +303,7 @@ def neardup_stream(
                                 "epoch_id", F.lit(0).cast("long")
                             ),
                         )
+                        watermark, n_delta = int(epoch_id), 0
                     else:
                         table_store.write(
                             delta_stage,
@@ -294,6 +312,11 @@ def neardup_stream(
                             ),
                             mode="append",
                         )
+                        # an empty delta leaves no epoch_id in the changelog,
+                        # so (as in the table-derived count) it does not
+                        # advance the compaction cadence
+                        if table_store.read_meta(delta_stage)["write_row_count"]:
+                            n_delta += 1
             elif components_path is not None:
                 # continuously-maintained clustering: contract-and-merge the
                 # epoch's pairs into the snapshot+delta component map —
@@ -311,9 +334,6 @@ def neardup_stream(
                 edges = kept.select(
                     F.col("key_a").alias("src"), F.col("key_b").alias("dst")
                 )
-                # cheap cache scan (kept is persisted + materialized); see
-                # the table-store branch above
-                n_edges = kept.count()
                 prev, v = latest_components(spark, components_path)
                 snaps = [n for n, k in _versions(components_path) if k == "v"]
                 last_snap = max(snaps, default=-1)

@@ -289,14 +289,73 @@ def test_tablestore_append_lineage_per_write(spark, cfg, tmp_path):
     df1 = spark.range(100).repartition(4)
     df2 = spark.range(100, 160).repartition(2)
     store.write("s", df1, mode="append")
+    # no meta before the first append: the table itself was counted
+    assert store.read_meta("s")["count_source"] == "counted"
     store.write("s", df2, mode="append")
     meta = store.read_meta("s")
     assert meta["row_count"] == 160  # cumulative
+    assert meta["count_source"] == "folded"  # previous meta + this write
     assert meta["write_row_count"] == 60  # this write only
     assert meta["n_partitions"] == 2  # df2's partitioning, not 4+2 conflated
     assert sum(meta["partition_rows"].values()) == 60
     assert store.read("s").count() == 160
     assert set(store.read("s").columns) == {"id"}
+    # an overwrite reconciles the count from the rows it wrote
+    store.write("s", spark.range(7))
+    meta = store.read_meta("s")
+    assert meta["row_count"] == 7 and meta["count_source"] == "counted"
+
+
+def _count_jobs(spark, group: str, fn):
+    """(fn(), the number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the listener bus: let it catch up
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tablestore_runs_no_metadata_jobs(spark, cfg, tmp_path):
+    """A stage write runs only its save job(s): the per-partition lineage is
+    observed on the write itself, not read back, and the meta carries the
+    schema, so reading a stage this store wrote runs no job at all (no
+    schema inference)."""
+    import threading
+
+    df = spark.range(1000).repartition(4)
+    _, plain = _count_jobs(
+        spark, "plain-save", lambda: df.write.parquet(str(tmp_path / "plain"))
+    )
+    store = TableStore(tmp_path / "store", cfg.params_hash())
+    out, n_write = _count_jobs(spark, "store-write", lambda: store.write("s", df))
+    assert n_write == plain
+    meta = store.read_meta("s")
+    assert meta["write_row_count"] == 1000 and meta["n_partitions"] == 4
+    assert sum(meta["partition_rows"].values()) == 1000
+    assert set(out.columns) == {"id"}
+
+    read, n_read = _count_jobs(spark, "store-read", lambda: store.read("s"))
+    assert n_read == 0
+    assert read.count() == 1000
+
+    # a zero-row write still completes its observation (no blocking get)
+    done = {}
+    t = threading.Thread(
+        target=lambda: done.update(out=store.write("empty", df.limit(0))),
+        daemon=True,
+    )
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "write of a limit(0) frame blocked"
+    meta = store.read_meta("empty")
+    assert meta["row_count"] == meta["write_row_count"] == 0
+    assert meta["n_partitions"] == 0 and meta["partition_rows"] == {}
+    assert done["out"].count() == 0
 
 
 def test_tablestore_write_id_unique_across_resume(spark, cfg, tmp_path):

@@ -497,3 +497,90 @@ def test_changelog_epoch_id_is_always_long(spark, tmp_path, cfg):
         df = store.read(stage)
         assert dict(df.dtypes)["epoch_id"] == "bigint", stage
     assert dict(store.read("components").dtypes)["folded_epoch"] == "bigint"
+
+
+def test_empty_delta_epoch_keeps_compaction_cadence(spark, cfg, tmp_path):
+    """The stream carries the component map's fold state (watermark, delta
+    epochs) across epochs instead of re-reading it from the tables. An
+    epoch whose micro-batch yields no pairs appends an empty delta, which
+    leaves no epoch_id in the changelog, so it must not advance the
+    compaction cadence. After every epoch, including after a restart, the
+    carried state must match `store_latest_components` on the same tables:
+    an epoch compacts exactly when the table-derived delta count says it
+    should, and the folded map equals the closure of the emitted pairs."""
+    import random
+
+    from finchspark.plans.checkpoint import TableStore
+    from finchspark.streaming.neardup import neardup_stream, store_latest_components
+
+    rng = random.Random(11)
+
+    def text():
+        return "".join(rng.choice("abcdefghijklmnopqrstuvwxyz ") for _ in range(300))
+
+    base_docs = {i: text() for i in range(8)}
+    next_id = iter(range(100, 1000))
+
+    def paired(n):  # copies of preload docs: every doc pairs
+        return [(next(next_id), base_docs[rng.randrange(8)]) for _ in range(n)]
+
+    def unpaired(n):  # fresh random text: no pair
+        return [(next(next_id), text()) for _ in range(n)]
+
+    compact_every = 3
+    store = TableStore(tmp_path / "meta", cfg.params_hash())
+    src = tmp_path / "incoming"
+    src.mkdir()
+
+    def start():
+        return neardup_stream(
+            spark.readStream.schema("doc_id long, content string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src)),
+            cfg, "signatures", "pairs", str(tmp_path / "ckpt"),
+            available_now=False, components_path="components",
+            compact_every=compact_every, table_store=store,
+        )
+
+    def closure():
+        parent = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+
+        for r in store.read("pairs").collect():
+            a, b = find(r["key_a"]), find(r["key_b"])
+            parent[max(a, b)] = min(a, b)
+        return {x: find(x) for x in parent}
+
+    def epoch(q, rows):
+        """Run one epoch; return whether it rewrote the base table."""
+        before = store.read_meta("components")["write_id"]
+        _, n_delta = store_latest_components(spark, store, "components")
+        _docs(spark, rows).coalesce(1).write.mode("append").parquet(str(src))
+        q.processAllAvailable()
+        compacted = store.read_meta("components")["write_id"] != before
+        assert compacted == (n_delta + 1 >= compact_every)
+        folded, _ = store_latest_components(spark, store, "components")
+        assert {r["node"]: r["component"] for r in folded.collect()} == closure()
+        return compacted
+
+    _docs(spark, list(base_docs.items())).coalesce(1).write.mode("append").parquet(
+        str(src)
+    )
+    q = start()
+    q.processAllAvailable()  # preload epoch writes the base
+    assert not epoch(q, paired(3))
+    assert not epoch(q, unpaired(3))  # empty delta
+    assert store.read_meta("components_delta")["write_row_count"] == 0
+    assert store_latest_components(spark, store, "components")[1] == 1
+    assert not epoch(q, paired(3))
+    q.stop()
+    # restart: the new query reads the fold state from the tables
+    q = start()
+    assert epoch(q, unpaired(3))  # third delta slot: compacts
+    assert not epoch(q, unpaired(3))
+    assert not epoch(q, paired(3))
+    q.stop()
